@@ -265,17 +265,14 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # flush once the final watermark passes, so most carry exact DuckDB oracles
 # replaying the watermark cutoff in SQL; batch-equivalence also in tests) ---
 
-def _run_bounded_stream(spark, sf_dir, build, name_prefix):
-    import uuid as _uuid
-
+def _run_bounded_stream(spark, sf_dir, build):
     from firebase_etl_spark.streaming.events import (
         read_events_stream,
         run_stream_to_memory,
     )
 
     stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    name = f"{name_prefix}_{_uuid.uuid4().hex[:8]}"
-    return run_stream_to_memory(spark, build(stream), name)
+    return run_stream_to_memory(build(stream))
 
 
 def stream_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -284,7 +281,7 @@ def stream_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from firebase_etl_spark.streaming.events import streaming_event_counts
 
     return _run_bounded_stream(
-        spark, sf_dir, lambda s: streaming_event_counts(s, window="1 hour"), "stream_counts"
+        spark, sf_dir, lambda s: streaming_event_counts(s, window="1 hour")
     )
 
 
@@ -293,7 +290,7 @@ def stream_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from firebase_etl_spark.streaming.events import streaming_sessionization
 
     return _run_bounded_stream(
-        spark, sf_dir, lambda s: streaming_sessionization(s), "stream_sessions"
+        spark, sf_dir, lambda s: streaming_sessionization(s)
     )
 
 
@@ -302,8 +299,6 @@ def stream_enriched_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer dimension (broadcast per micro-batch, no join state), then a
     watermarked hourly rollup per market segment. Bounded append emission
     is deterministic => oracle-checked."""
-    import uuid as _uuid
-
     from firebase_etl_spark.streaming.events import (
         read_events_stream,
         run_stream_to_memory,
@@ -312,10 +307,7 @@ def stream_enriched_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
     dim = load_table(spark, "customer", sf_dir)
-    name = f"stream_enrich_{_uuid.uuid4().hex[:8]}"
-    return run_stream_to_memory(
-        spark, streaming_enrich_with_dim(stream, dim), name
-    )
+    return run_stream_to_memory(streaming_enrich_with_dim(stream, dim))
 
 
 def stream_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -323,8 +315,6 @@ def stream_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark-bounded join state) — the streaming twin of the batch
     bucketized range join. A bounded run emits the complete pair set, so
     the per-user counts share events_near_pairs' exact semantics."""
-    import uuid as _uuid
-
     from firebase_etl_spark.streaming.events import (
         read_events_stream,
         run_stream_to_memory,
@@ -333,10 +323,7 @@ def stream_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     a = read_events_stream(spark, f"{sf_dir}/events.parquet")
     b = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    name = f"stream_pairs_{_uuid.uuid4().hex[:8]}"
-    pairs = run_stream_to_memory(
-        spark, streaming_self_join_near_pairs(a, b), name
-    )
+    pairs = run_stream_to_memory(streaming_self_join_near_pairs(a, b))
     return (
         pairs.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
@@ -1270,8 +1257,6 @@ def stream_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     (minima are order/batching-insensitive), so the final emission per
     key — highest n_seen — is bit-identical to the batch bottom-k the
     oracle replays. Integers only."""
-    import uuid as _uuid
-
     from firebase_etl_spark.streaming.events import (
         read_events_stream,
         run_stream_to_memory,
@@ -1279,9 +1264,8 @@ def stream_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    name = f"kmv_{_uuid.uuid4().hex[:8]}"
     inc = run_stream_to_memory(
-        spark, streaming_kmv_distinct(stream), name, output_mode="append"
+        streaming_kmv_distinct(stream), output_mode="append"
     )
     return (
         inc.groupBy("g")
@@ -1646,12 +1630,10 @@ def stream_keep_latest_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_stream_to_memory,
         streaming_keep_latest,
     )
-    import uuid as _uuid
 
     stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    name = f"keep_latest_{_uuid.uuid4().hex[:8]}"
     out = run_stream_to_memory(
-        spark, streaming_keep_latest(stream), name, output_mode="update"
+        streaming_keep_latest(stream), output_mode="update"
     )
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
@@ -1940,7 +1922,6 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         lambda s: streaming_event_counts(s, window="2 hours", slide="1 hour"),
-        "stream_sliding",
     )
 
 
@@ -1956,7 +1937,6 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         lambda s: streaming_dedup(s, keys=["user_id", "event_type"]),
-        "stream_dedup",
     )
     return out.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).alias("n_emitted")
@@ -3617,9 +3597,12 @@ def _sqlstore_orders_fixture(spark: SparkSession, sf_dir: str) -> str:
     )
     path = f"/tmp/spark_graft_sqlstore_{tag}.duckdb"
     if not os.path.exists(path):
+        import threading
+
         import duckdb
 
-        tmp = f"{path}.tmp.{os.getpid()}"
+        # per thread: two queries of one process may build it at once
+        tmp = f"{path}.tmp.{os.getpid()}.{threading.get_ident()}"
         con = duckdb.connect(tmp)
         try:
             con.execute(
@@ -3822,8 +3805,6 @@ def stream_orders_sqlstore_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     one bounded drive, per-priority aggregate in complete mode. The
     oracle computes the same aggregate from the parquet table, so a
     green row proves the cursor tail covers every row exactly once."""
-    import uuid as _uuid
-
     from firebase_etl_spark.streaming.events import run_stream_to_memory
 
     path = _sqlstore_orders_fixture(spark, sf_dir)
@@ -3839,8 +3820,7 @@ def stream_orders_sqlstore_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         )
     )
-    name = f"sqlstore_tail_{_uuid.uuid4().hex[:8]}"
-    out = run_stream_to_memory(spark, plan, name, output_mode="complete")
+    out = run_stream_to_memory(plan, output_mode="complete")
     return out.orderBy("o_orderpriority")
 
 
@@ -5756,8 +5736,6 @@ def stream_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch matrix and share its DuckDB oracle — order-sensitive
     stateful streaming under the driver gate, not just order-insensitive
     upserts."""
-    import uuid as _uuid
-
     from firebase_etl_spark.streaming.events import (
         read_events_stream,
         run_stream_to_memory,
@@ -5765,11 +5743,8 @@ def stream_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    name = f"transitions_{_uuid.uuid4().hex[:8]}"
     inc = run_stream_to_memory(
-        spark,
         streaming_transition_counts(stream),
-        name,
         output_mode="append",
     )
     # checkpoint the (cur, next) count table (bounded by type-pair
@@ -6392,8 +6367,6 @@ def stream_count_min_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     (batching-invariant), so the final emission per key is
     bit-identical to the batch sketch the oracle replays; estimates
     are integers and provably >= truth."""
-    import uuid as _uuid
-
     from firebase_etl_spark.streaming.events import (
         read_events_stream,
         run_stream_to_memory,
@@ -6402,11 +6375,8 @@ def stream_count_min_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     probe = [0, 1, 2, 3, 4]
     stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    name = f"cms_{_uuid.uuid4().hex[:8]}"
     inc = run_stream_to_memory(
-        spark,
         streaming_count_min(stream, probe),
-        name,
         output_mode="append",
     )
     ests = [F.col(f"f.est_u{u}").alias(f"est_u{u}") for u in probe]
@@ -6902,8 +6872,6 @@ def stream_ab_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     emission, so the stateful path carries zero Python float ops and
     the final row bit-equals the batch moments the oracle
     aggregates."""
-    import uuid as _uuid
-
     from firebase_etl_spark.functions.portable_math import (
         fixed_e6_expr,
     )
@@ -6915,11 +6883,8 @@ def stream_ab_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    name = f"abm_{_uuid.uuid4().hex[:8]}"
     inc = run_stream_to_memory(
-        spark,
         streaming_ab_monitor(stream),
-        name,
         output_mode="append",
     )
     final = (
@@ -7197,8 +7162,6 @@ def stream_hll_distinct_users(
     oracle replays; the estimate applies ENGINE-side on the final
     emission through the same portable estimator the batch report
     compiles (heavy_hitters.hll_finalize)."""
-    import uuid as _uuid
-
     from firebase_etl_spark.operators.heavy_hitters import hll_finalize
     from firebase_etl_spark.streaming.events import (
         read_events_stream,
@@ -7207,11 +7170,8 @@ def stream_hll_distinct_users(
     )
 
     stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    name = f"hll_{_uuid.uuid4().hex[:8]}"
     inc = run_stream_to_memory(
-        spark,
         streaming_hll_distinct(stream),
-        name,
         output_mode="append",
     )
     final = (
@@ -7629,8 +7589,6 @@ def stream_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     counters per key. Gates EVENT traffic where events_srm_check
     gates DISTINCT units — the live vs the audit denominator, both
     deliberate."""
-    import uuid as _uuid
-
     from firebase_etl_spark.operators.stats import SRM_CHI2_CRIT_E6
     from firebase_etl_spark.streaming.events import (
         read_events_stream,
@@ -7639,11 +7597,8 @@ def stream_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    name = f"srm_{_uuid.uuid4().hex[:8]}"
     inc = run_stream_to_memory(
-        spark,
         streaming_srm_monitor(stream),
-        name,
         output_mode="append",
     )
     final = (
@@ -8075,8 +8030,6 @@ def stream_benford_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     builders as the batch events_benford_audit, so the stateful path
     is pure counter increments and the final row bit-equals the
     batch aggregate."""
-    import uuid as _uuid
-
     from firebase_etl_spark.operators.stats import (
         BENFORD_CHI2_CRIT_E6,
         benford_chi2_sql,
@@ -8089,11 +8042,8 @@ def stream_benford_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    name = f"benford_{_uuid.uuid4().hex[:8]}"
     inc = run_stream_to_memory(
-        spark,
         streaming_benford_monitor(stream),
-        name,
         output_mode="append",
     )
     final = (

@@ -3,10 +3,15 @@ step 9): the reference is strictly batch, so these are the planned streaming
 extension — windowed aggregation with watermarks, streaming dedup, and
 session windows over the ``events`` table.
 
-Local smoke path: ``readStream`` over the parquet directory + ``memory``
-sink + ``processAllAvailable()`` drives a bounded batch through the
-streaming engine synchronously (tests/test_streaming.py). The same plans
-bind to Kafka/file sources in production — the transformations are
+Bounded drives: ``_drive_available`` runs a writer with
+``trigger(availableNow=True)`` on the caller's session and blocks until the
+query ends. The engine processes everything the source holds at start, then
+runs the final no-data batch that advances the watermark, so append-mode
+windows are flushed before the query stops. Each drive gets a fresh
+checkpoint that is removed afterwards and changes no session conf, so drives
+may run concurrently on one session. ``run_stream_to_memory`` collects into
+a memory sink, ``stream_upsert_parquet`` upserts into parquet. The same
+plans bind to Kafka/file sources in production — the transformations are
 source-agnostic.
 
 Scale notes: watermarks bound state; ``dropDuplicatesWithinWatermark``
@@ -17,11 +22,15 @@ the engine, no applyInPandasWithState needed for gap sessions).
 
 from __future__ import annotations
 
+import itertools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 #: events table schema with ts as long nanos (as stored — see
 #: sources/tables.py) — the stream reader converts to TimestampType.
@@ -125,104 +134,47 @@ def streaming_sessionization(
     )
 
 
-def _await_no_data_batch(q, timeout_s: float = 15.0) -> None:
-    """Block until the engine has run a no-data micro-batch after the last
-    data batch (or ``timeout_s`` passes).
-
-    ``processAllAvailable()`` returns as soon as all SOURCE data is
-    committed — but append-mode windowed aggregations only emit when the
-    watermark advances, which happens in the no-data batch the engine
-    schedules right AFTER the last data batch
-    (``spark.sql.streaming.noDataMicroBatches.enabled``). Stopping the
-    query immediately races that batch and the sink sees zero finalized
-    windows. Bounded-drive concern only: an unbounded production stream
-    always has a next batch.
-    """
-    import time
-
-    deadline = time.time() + timeout_s
-    while time.time() < deadline:
-        # oldest-first scan: a 0-input batch only counts once a data batch
-        # precedes it (the source's warm-up batches are also 0-input)
-        seen_data = False
-        progresses = q.recentProgress
-        for p in progresses:
-            if p and p["numInputRows"] > 0:
-                seen_data = True
-            elif p is not None and seen_data:
-                return
-        if not progresses and q.lastProgress is None:
-            return  # query never produced progress; nothing to wait for
-        time.sleep(0.1)
+#: memory-sink query names; the view a drive registers is dropped after it
+_sink_ids = itertools.count()
 
 
-def run_stream_to_memory(
-    spark: SparkSession,
-    plan: DataFrame,
-    name: str,
-    output_mode: str = "append",
-    state_partitions: int | None = 8,
-) -> DataFrame:
-    """Drive a bounded streaming plan to completion into an in-memory table;
-    returns the materialized result as a batch DataFrame (test/smoke path).
+def _drive_available(writer: DataStreamWriter) -> None:
+    """Run ``writer`` over all input available at start, then stop.
 
-    ``state_partitions`` sizes the state store for the bounded local drive:
-    a streaming agg pins one state-store instance (with per-batch delta
-    checkpoints) per shuffle partition for the life of the query, so 32
-    partitions over a few thousand windows is pure overhead. On a real
-    cluster with unbounded input leave it None (cluster default). The
-    checkpoint goes on tmpfs when available — state durability across
-    driver restarts is a production-checkpoint (object-store path) concern,
-    not a bounded-smoke concern."""
-    import shutil
-    import tempfile
-
-    ckpt_root = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    ckpt = f"{ckpt_root}/spark-stream-ckpt/{name}"
-    conf = spark.conf
-    old_parts = conf.get("spark.sql.shuffle.partitions")
-    # _await_no_data_batch exits on the FIRST 0-input progress entry
-    # after a data batch. For plans whose append output needs no
-    # watermark flush, that entry is the engine's IDLE progress event,
-    # which defaults to one per 10 s (noDataProgressEventInterval) —
-    # measured as a flat 10.0 s tax on every such bounded drive. A real
-    # flush batch is scheduled immediately after the last data batch
-    # (ProcessingTime(0) trigger), but its PROGRESS EVENT is throttled
-    # by the same interval: r12 profiling showed drives whose flush
-    # batch finished in 3 ms still waiting a flat ~1.0 s for the event
-    # under the old 1 s setting. 100 ms keeps the completion proof
-    # (the await still demands a 0-input entry after a data batch)
-    # while cutting the idle tax to one poll cycle.
-    old_idle = conf.get(
-        "spark.sql.streaming.noDataProgressEventInterval", "10000"
-    )
-    if state_partitions is not None:
-        conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    conf.set("spark.sql.streaming.noDataProgressEventInterval", "100")
+    The checkpoint is fresh per drive and removed afterwards; it goes on
+    tmpfs when available — state durability across driver restarts is a
+    production-checkpoint (object-store path) concern, not a bounded-drive
+    concern. State partitions are the session's
+    ``spark.sql.shuffle.partitions``."""
+    root = "/dev/shm" if os.path.isdir("/dev/shm") else None
+    ckpt = tempfile.mkdtemp(prefix="spark-stream-ckpt-", dir=root)
     try:
         q = (
-            plan.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
+            writer.option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
             .start()
         )
         try:
-            q.processAllAvailable()
-            if output_mode == "append":
-                # update/complete sinks see rows at the data batch itself;
-                # only append-mode windows need the watermark flush batch
-                _await_no_data_batch(q)
+            q.awaitTermination()
         finally:
             q.stop()
     finally:
-        if state_partitions is not None:
-            conf.set("spark.sql.shuffle.partitions", old_parts)
-        conf.set(
-            "spark.sql.streaming.noDataProgressEventInterval", old_idle
-        )
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.sql(f"SELECT * FROM {name}")
+
+
+def run_stream_to_memory(plan: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Drive a bounded streaming plan to completion into an in-memory sink;
+    returns the materialized result as a batch DataFrame. The sink's temp
+    view is dropped before returning; the frame keeps the sink's rows."""
+    spark = plan.sparkSession
+    name = f"stream_sink_{next(_sink_ids)}"
+    try:
+        _drive_available(
+            plan.writeStream.outputMode(output_mode).format("memory").queryName(name)
+        )
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def streaming_keep_latest(
@@ -301,14 +253,7 @@ def streaming_keep_latest(
     )
 
 
-def stream_upsert_parquet(
-    spark: SparkSession,
-    plan: DataFrame,
-    path: str,
-    key: str,
-    name: str,
-    state_partitions: int | None = 8,
-) -> None:
+def stream_upsert_parquet(plan: DataFrame, path: str, key: str) -> None:
     """Production-shaped streaming sink: foreachBatch drives each
     micro-batch through the batch upsert (sinks/merge.py), so the target
     parquet is a keyed materialized view of the stream — last write per key
@@ -316,10 +261,9 @@ def stream_upsert_parquet(
     foreachBatch body targets Delta/Iceberg MERGE or a JDBC upsert in
     production; foreachBatch is the bridge that reuses batch sinks from
     streaming without a dedicated connector."""
-    import shutil
-    import tempfile
-
     from firebase_etl_spark.sinks.merge import upsert
+
+    spark = plan.sparkSession
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if not os.path.isdir(path):
@@ -332,27 +276,7 @@ def stream_upsert_parquet(
         shutil.rmtree(path)
         os.replace(staged, path)
 
-    ckpt_root = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    ckpt = f"{ckpt_root}/spark-stream-ckpt/{name}"
-    conf = spark.conf
-    old_parts = conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            plan.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        if state_partitions is not None:
-            conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    _drive_available(plan.writeStream.outputMode("update").foreachBatch(sink))
 
 
 def streaming_enrich_with_dim(

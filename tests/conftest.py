@@ -15,6 +15,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+    # the package default (16g) lets the JVM heap outgrow a 15 GB host
+    # while the query fixture runs 16 queries at once; the suite's data
+    # needs far less
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
     s = get_spark(
         app_name="tests",
         shuffle_partitions=8,
@@ -41,10 +45,9 @@ def driver_query_runs(spark):
     """ONE construction+collect pass over every declared query at the
     test SF, shared by the oracle-match and scale-guard sweeps (each
     used to pay its own full pass — the two slowest fixtures in the
-    suite). Batch queries run CONCURRENTLY from a thread pool (Spark
-    interleaves jobs from submitter threads — the same shape bench.py's
-    warmup uses); stream queries run sequentially first because a
-    bounded drive temporarily rewrites session confs and must not race.
+    suite). Queries, bounded stream drives included, run CONCURRENTLY
+    from a thread pool (Spark interleaves jobs from submitter threads —
+    the same shape bench.py's warmup uses).
 
     Returns {name: (scale_violations, spark_columns, rows, error)}."""
     import sys as _sys
@@ -68,9 +71,5 @@ def driver_query_runs(spark):
             return (None, None, None, exc)
 
     names = sorted(qs)
-    stream = [n for n in names if n.startswith("stream_")]
-    batch = [n for n in names if not n.startswith("stream_")]
-    out = {n: one(n) for n in stream}
     with ThreadPoolExecutor(max_workers=16) as pool:
-        out.update(zip(batch, pool.map(one, batch)))
-    return out
+        return dict(zip(names, pool.map(one, names)))

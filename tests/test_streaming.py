@@ -23,7 +23,7 @@ def events_stream(spark, sf_dir):
 
 def test_streaming_counts_match_batch(spark, sf_dir, events_stream):
     plan = streaming_event_counts(events_stream, window="1 hour")
-    got = run_stream_to_memory(spark, plan, "stream_counts", output_mode="append")
+    got = run_stream_to_memory(plan, output_mode="append")
 
     batch = (
         load_table(spark, "events", sf_dir)
@@ -57,14 +57,14 @@ def test_streaming_counts_match_batch(spark, sf_dir, events_stream):
 
 def test_streaming_dedup_removes_dupes(spark, events_stream):
     plan = streaming_dedup(events_stream, keys=["user_id", "event_type"])
-    got = run_stream_to_memory(spark, plan, "stream_dedup", output_mode="append")
+    got = run_stream_to_memory(plan, output_mode="append")
     rows = got.groupBy("user_id", "event_type").count().filter("count > 1").collect()
     assert rows == []
 
 
 def test_streaming_sessionization_runs(spark, events_stream):
     plan = streaming_sessionization(events_stream, gap="30 minutes")
-    got = run_stream_to_memory(spark, plan, "stream_sessions", output_mode="append")
+    got = run_stream_to_memory(plan, output_mode="append")
     rows = got.collect()
     assert len(rows) > 0
     for r in rows:
@@ -86,7 +86,7 @@ def test_streaming_keep_latest_matches_batch_dedup(spark):
     sf = "/root/testdata/sf0.001"
     stream = read_events_stream(spark, f"{sf}/events.parquet")
     out = run_stream_to_memory(
-        spark, streaming_keep_latest(stream), "keep_latest_t", output_mode="update"
+        streaming_keep_latest(stream), output_mode="update"
     )
     # final emission per key (single-file source => one batch, but stay
     # robust to multi-batch: later emission wins)
@@ -128,9 +128,7 @@ def test_foreachbatch_upsert_materializes_keep_latest(spark, tmp_path):
     sf = "/root/testdata/sf0.001"
     path = str(tmp_path / "users_latest")
     stream = read_events_stream(spark, f"{sf}/events.parquet")
-    stream_upsert_parquet(
-        spark, streaming_keep_latest(stream), path, key="user_id", name="fb_upsert_t"
-    )
+    stream_upsert_parquet(streaming_keep_latest(stream), path, key="user_id")
     got = {
         r["user_id"]: (r["ts"], r["event_id"])
         for r in spark.read.parquet(path).collect()
@@ -150,6 +148,67 @@ def test_stream_dedup_emits_once_per_key(spark):
 
     rows = stream_dedup_events(spark, "/root/testdata/sf0.001").collect()
     assert rows and all(r["n_emitted"] == 1 for r in rows)
+
+
+def test_concurrent_drives_share_session_and_leave_nothing(spark, sf_dir):
+    """Two bounded drives at once on one session return a lone drive's
+    rows, leave no temp view, active query, conf change or checkpoint
+    behind, and report progress to a listener on that same session."""
+    import os
+    import tempfile
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from firebase_etl_spark.plans.queries_ext import stream_dedup_events
+
+    class DataBatches(StreamingQueryListener):
+        def __init__(self):
+            self.lock = threading.Lock()
+            self.runs: set[str] = set()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            if event.progress.numInputRows > 0:
+                with self.lock:
+                    self.runs.add(str(event.progress.runId))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    ckpt_root = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+
+    def state():
+        return (
+            sorted(t.name for t in spark.catalog.listTables() if t.isTemporary),
+            [q.id for q in spark.streams.active],
+            spark.conf.get("spark.sql.shuffle.partitions"),
+            sorted(n for n in os.listdir(ckpt_root) if n.startswith("spark-stream-ckpt")),
+        )
+
+    def drive(_=None):
+        return sorted(stream_dedup_events(spark, sf_dir).collect())
+
+    before = state()
+    listener = DataBatches()
+    spark.streams.addListener(listener)
+    try:
+        lone = drive()
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            both = list(pool.map(drive, range(2)))
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+
+    assert lone and both == [lone, lone]
+    assert state() == before
+    assert len(listener.runs) == 3
 
 
 def test_stream_sliding_matches_batch_sliding(spark):
@@ -350,7 +409,6 @@ def test_streaming_transitions_survive_batch_boundaries(spark, tmp_path):
     whose two events straddle a batch boundary, which only the carried
     per-user state can see."""
     import time as _time
-    import uuid as _uuid
 
     from pyspark.sql import functions as F
 
@@ -383,9 +441,7 @@ def test_streaming_transitions_survive_batch_boundaries(spark, tmp_path):
         _time.sleep(1.1)  # distinct mtimes for deterministic batch order
     stream = read_events_stream(spark, path)
     inc = run_stream_to_memory(
-        spark,
         streaming_transition_counts(stream),
-        f"trans_{_uuid.uuid4().hex[:8]}",
         output_mode="append",
     )
     got = {
