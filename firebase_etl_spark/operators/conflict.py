@@ -4,11 +4,9 @@ Parity target: reference main.py:144-154 + postgres_loader.py:54-86: fetch
 all existing target ids, per-row membership test, regenerate colliding ids by
 rejection-sampling uuid4 prefixes (J2/J3).
 
-Spark-first design: the O(n·m) membership loop becomes a left-anti /
-left-semi join. The existing-id side is a single projected column (column
-pruning pushes to the source scan); it is usually small enough to broadcast.
-Regenerated ids can collide again, so the rewrite iterates to a fixpoint —
-each iteration only reprocesses the (tiny) colliding remainder.
+Spark-first design: the O(n·m) membership loop becomes a broadcast join.
+The existing-id side is a single projected column (column pruning pushes to
+the source scan); it is usually small enough to broadcast.
 """
 
 from __future__ import annotations
@@ -24,38 +22,36 @@ def skip_conflicts(incoming: DataFrame, existing: DataFrame, key: str = "id") ->
     return incoming.join(F.broadcast(existing.select(key)), key, "left_anti")
 
 
-def find_conflicts(incoming: DataFrame, existing: DataFrame, key: str = "id") -> DataFrame:
-    """Rows whose key already exists in the target (left semi)."""
-    return incoming.join(F.broadcast(existing.select(key)), key, "left_semi")
+#: redraw rounds unrolled into the plan; a fresh uuid20 hitting the target
+#: even once is ~impossible, so rows still colliding after these are dropped
+ID_REDRAW_ROUNDS = 5
 
 
-def resolve_id_conflicts(
-    incoming: DataFrame,
-    existing: DataFrame,
-    key: str = "id",
-    max_rounds: int = 5,
-) -> DataFrame:
-    """Rewrite colliding ids with fresh uuid20s until disjoint from both the
-    target's ids and the non-colliding incoming rows.
+def resolve_id_conflicts(incoming: DataFrame, existing: DataFrame, key: str = "id") -> DataFrame:
+    """Give every incoming row whose ``key`` exists in the target a fresh
+    uuid20; the other rows and columns pass through unchanged.
 
-    Each round: semi-join finds collisions, they get fresh ids, the loop
-    re-checks. With 20-char uuid space re-collision is ~impossible, so this
-    is 1 round in practice; ``max_rounds`` bounds the plan size. The
-    existing-id projection is broadcast — no shuffle of the incoming side.
+    Guarantee: the output's keys are disjoint from the target's keys. Fresh
+    ids are not checked against the other incoming keys. One lazy plan, no
+    Spark action: each round left-joins the rows against the broadcast
+    target ids tagged ``__hit`` and redraws the hits' keys, so each fresh id
+    is drawn once on one branch; a final left-anti join drops any row still
+    colliding after ``ID_REDRAW_ROUNDS`` rounds.
     """
-    existing_ids = existing.select(key)
-    clean = incoming.join(F.broadcast(existing_ids), key, "left_anti")
-    colliding = incoming.join(F.broadcast(existing_ids), key, "left_semi")
-    for _ in range(max_rounds):
-        if colliding.isEmpty():
-            break
-        retried = colliding.withColumn(key, uuid20())
-        still = retried.join(F.broadcast(existing_ids), key, "left_semi")
-        clean = clean.unionByName(
-            retried.join(F.broadcast(existing_ids), key, "left_anti")
+    # distinct so a duplicated target id cannot fan a row out in the left
+    # join; the side is broadcast whole anyway, so deduplicating it in one
+    # partition costs no shuffle
+    hits = F.broadcast(
+        existing.select(key).coalesce(1).distinct().withColumn("__hit", F.lit(True))
+    )
+    out = incoming
+    for _ in range(ID_REDRAW_ROUNDS):
+        out = (
+            out.join(hits, key, "left")
+            .withColumn(key, F.when(F.col("__hit"), uuid20()).otherwise(F.col(key)))
+            .drop("__hit")
         )
-        colliding = still
-    return clean
+    return out.join(hits, key, "left_anti").select(*incoming.columns)
 
 
 def cascade_purge_audit(

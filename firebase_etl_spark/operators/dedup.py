@@ -23,17 +23,8 @@ Spark-first design:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-@dataclass
-class DedupResult:
-    deduped: DataFrame
-    duplicate_stats: DataFrame  # one row per duplicated key value
-    method: str
 
 
 def _ordering(order_col: Column, tiebreaker: Column, keep: str) -> list[Column]:
@@ -121,16 +112,3 @@ def duplicate_stats(
         )
         .filter(F.col("dup_count") > 1)
     )
-
-
-def dedup_report(df: DataFrame, result: DataFrame, key: str = "email") -> dict:
-    """Counts dict mirroring the reference's stats shape
-    (user_transformer.py:314-319). Triggers actions — driver-side use only."""
-    initial = df.count()
-    final = result.count()
-    return {
-        "initial_count": initial,
-        "final_count": final,
-        "removed_count": initial - final,
-        "deduplication_method": f"keep latest per {key}",
-    }

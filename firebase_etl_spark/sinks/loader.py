@@ -5,16 +5,17 @@ The reference inserts one row per transaction to isolate failures and
 accumulates per-row errors in a Python list. Distributed rewrite: validate
 FIRST (operators/validate), write the good side in bulk, quarantine the bad
 side with reasons — no per-row transactions, no driver-side error list;
-counts come from one action per side (or ``observe`` metrics on the write).
+counts come from an Observation on each write.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
-from firebase_etl_spark.operators.validate import ValidationResult, validate_users
+from firebase_etl_spark.operators.validate import validate_users
 from firebase_etl_spark.sinks.files import write_parquet
 
 
@@ -29,20 +30,22 @@ class LoadReport:
         return self.loaded / self.total if self.total else 1.0
 
 
-def load_with_quarantine(
-    df: DataFrame,
-    good_path: str,
-    quarantine_path: str,
-    validate=validate_users,
-) -> LoadReport:
+def _write_counted(df: DataFrame, path: str) -> int:
+    """Write ``df`` as parquet and return its row count, observed on the
+    write itself (no second action)."""
+    obs = Observation()
+    write_parquet(df.observe(obs, F.count(F.lit(1)).alias("rows")), path)
+    return obs.get["rows"]
+
+
+def load_with_quarantine(df: DataFrame, good_path: str, quarantine_path: str) -> LoadReport:
     """Validate -> bulk-write valid rows -> quarantine the rest (with their
     ``violations`` reasons). Mirrors the reference's load report shape
-    (postgres_loader.py:585-592) without its 1-row-per-transaction cost."""
-    result: ValidationResult = validate(df)
-    write_parquet(result.valid, good_path)
-    write_parquet(result.quarantine, quarantine_path)
-    loaded = result.valid.count()
-    quarantined = result.quarantine.count()
+    (postgres_loader.py:585-592) without its 1-row-per-transaction cost.
+    Each side's plan runs once, in its write; no count action."""
+    result = validate_users(df)
+    loaded = _write_counted(result.valid, good_path)
+    quarantined = _write_counted(result.quarantine, quarantine_path)
     return LoadReport(total=loaded + quarantined, loaded=loaded, quarantined=quarantined)
 
 

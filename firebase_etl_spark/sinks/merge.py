@@ -46,4 +46,4 @@ def upsert_parquet(
     merged = upsert(target, updates, key)
     dest = out_path or f"{path.rstrip('/')}.new"
     merged.write.mode("overwrite").parquet(dest)
-    return spark.read.parquet(dest)
+    return spark.read.schema(merged.schema).parquet(dest)

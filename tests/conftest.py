@@ -73,3 +73,25 @@ def driver_query_runs(spark):
     names = sorted(qs)
     with ThreadPoolExecutor(max_workers=16) as pool:
         return dict(zip(names, pool.map(one, names)))
+
+
+@pytest.fixture
+def jobs_started(spark):
+    """``jobs_started(fn)`` -> (fn(), number of Spark jobs fn started),
+    counted under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-started-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "jobs_started")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            # job-start events reach the status store through the listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -84,7 +84,7 @@ def test_required_columns_report(spark):
     assert rep["valid"] is False
 
 
-def test_conflict_resolution(spark):
+def test_conflict_resolution(spark, jobs_started):
     incoming = spark.createDataFrame(
         [("k1", "a"), ("k2", "b"), ("k3", "c")], "id string, v string"
     )
@@ -92,13 +92,30 @@ def test_conflict_resolution(spark):
     kept = skip_conflicts(incoming, existing)
     assert {r["id"] for r in kept.collect()} == {"k1", "k3"}
 
-    resolved = resolve_id_conflicts(incoming, existing)
+    resolved, n_jobs = jobs_started(lambda: resolve_id_conflicts(incoming, existing))
+    assert n_jobs == 0                         # a lazy plan: no Spark action
     rows = resolved.collect()
     assert len(rows) == 3                      # nothing dropped
     ids = {r["id"] for r in rows}
     assert "k2" not in ids                     # collision rewritten
     assert {r["v"] for r in rows} == {"a", "b", "c"}
     assert not ids & {"k2", "k9"}
+    assert resolved.columns == incoming.columns
+
+    # every incoming id collides, and the target lists one id twice
+    n = 100
+    incoming = spark.createDataFrame(
+        [(f"k{i}", f"v{i}", i) for i in range(n)], "id string, v string, n int"
+    )
+    existing = spark.createDataFrame(
+        [(f"k{i}",) for i in range(n)] + [("k7",)], "id string"
+    )
+    rows = resolve_id_conflicts(incoming, existing).collect()
+    ids = [r["id"] for r in rows]
+    assert len(rows) == n                      # all kept, none fanned out
+    assert len(set(ids)) == n
+    assert not set(ids) & {f"k{i}" for i in range(n)}
+    assert sorted((r["n"], r["v"]) for r in rows) == [(i, f"v{i}") for i in range(n)]
 
 
 def test_connected_components_labels_and_clusters(spark):

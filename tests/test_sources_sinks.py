@@ -98,16 +98,19 @@ def test_dynamic_partition_overwrite_replaces_only_touched(spark, tmp_path):
     assert back == [(1, "2024-01-01"), (2, "2024-01-01"), (9, "2024-01-02")]
 
 
-def test_load_with_quarantine(spark, tmp_path):
+def test_load_with_quarantine(spark, tmp_path, jobs_started):
     df = spark.createDataFrame(
         [("i1", "a@b.c", "ACTIVE"), (None, "b@b.c", "ACTIVE"), ("i3", None, "BAD")],
         "id string, email string, status string",
     )
-    rep = load_with_quarantine(
+    rep, n_jobs = jobs_started(lambda: load_with_quarantine(
         df, str(tmp_path / "good"), str(tmp_path / "quar")
-    )
+    ))
+    assert n_jobs == 2                         # one write per side, no counts
     assert (rep.total, rep.loaded, rep.quarantined) == (3, 1, 2)
+    good = spark.read.parquet(str(tmp_path / "good"))
     quar = spark.read.parquet(str(tmp_path / "quar"))
+    assert (good.count(), quar.count()) == (rep.loaded, rep.quarantined)
     assert "violations" in quar.columns
 
 
