@@ -428,9 +428,9 @@ ORACLES_EXT: dict[str, str] = {
                count(*) FILTER (WHERE u < thresh) AS n_sampled
         FROM s GROUP BY event_type ORDER BY event_type
     """,
-    # the Spark side round-trips customer through an RTDB export + the
-    # custom `rtdb` DataSource; computing the same aggregate straight from
-    # the parquet table proves the source preserves content exactly
+    # the Spark side round-trips customer through an RTDB export +
+    # read_rtdb_export; computing the same aggregate straight from the
+    # parquet table proves the reader preserves content exactly
     "rtdb_export_segment_stats": """
         SELECT c_mktsegment AS segment,
                count(*) AS n_customers,

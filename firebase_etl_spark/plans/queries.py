@@ -421,7 +421,6 @@ def order_rank_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lineitem_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS ((returnflag, linestatus), (returnflag), ()) —
     the general form behind rollup/cube, one shuffle for all three levels."""
-    load_table(spark, "lineitem", sf_dir).createOrReplaceTempView("__li_gs")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
@@ -429,10 +428,11 @@ def lineitem_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(sum(l_extendedprice), 2) AS total_price,
                grouping(l_returnflag) AS g_flag,
                grouping(l_linestatus) AS g_status
-        FROM __li_gs
+        FROM {li}
         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
         ORDER BY g_flag, g_status, l_returnflag, l_linestatus
-        """
+        """,
+        li=load_table(spark, "lineitem", sf_dir),
     )
 
 
@@ -442,19 +442,19 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     an aggregate + join (no per-row re-execution); expressed via spark.sql
     so the decorrelation path itself is exercised. The part filter
     broadcasts; the per-part average is a map-side-combinable agg."""
-    load_table(spark, "lineitem", sf_dir).createOrReplaceTempView("__li_q17")
-    load_table(spark, "part", sf_dir).createOrReplaceTempView("__p_q17")
     return spark.sql(
         """
         SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
-        FROM __li_q17, __p_q17
+        FROM {li}, {p}
         WHERE p_partkey = l_partkey
           AND p_type LIKE 'PROMO%'
           AND l_quantity < (
-              SELECT 0.2 * avg(l_quantity) FROM __li_q17 l2
-              WHERE l2.l_partkey = __li_q17.l_partkey
+              SELECT 0.2 * avg(l_quantity) FROM {li} l2
+              WHERE l2.l_partkey = {li}.l_partkey
           )
-        """
+        """,
+        li=load_table(spark, "lineitem", sf_dir),
+        p=load_table(spark, "part", sf_dir),
     )
 
 

@@ -1883,10 +1883,9 @@ def top_bigrams_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from firebase_etl_spark.operators.udtf import NGrams
 
     d = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    d.createOrReplaceTempView("__docs_udtf")
     spark.udtf.register("ngrams_udtf", NGrams)
     expanded = spark.sql(
-        "SELECT g.ngram FROM __docs_udtf, LATERAL ngrams_udtf(doc_id, text) AS g"
+        "SELECT g.ngram FROM {d}, LATERAL ngrams_udtf(doc_id, text) AS g", d=d
     )
     return (
         expanded.groupBy("ngram")
@@ -1982,12 +1981,12 @@ def events_props_key_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def rtdb_export_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1 (full-node scan) with hard oracle evidence: round-trip the
-    customer dim through an RTDB map-of-objects export and the custom
-    multi-partition ``rtdb`` DataSource (sources/rtdb_datasource.py), then
-    aggregate per market segment. The oracle computes the identical
-    aggregate straight from the parquet table, so a green row proves the
-    source's partitioned scan + raw-record parse preserve content exactly
-    (reference firebase_service.py:110-218 export shape).
+    customer dim through an RTDB map-of-objects export and the engine's
+    one RTDB reader (sources/firebase.py:read_rtdb_export), then aggregate
+    per market segment. The oracle computes the identical aggregate
+    straight from the parquet table, so a green row proves the reader's
+    map explode + typed record parse preserve content exactly (reference
+    firebase_service.py:110-218 export shape).
 
     The fixture write is INPUT materialization — the export file a backup
     job produces — not part of the measured plan: the bounded customer dim
@@ -1996,7 +1995,9 @@ def rtdb_export_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
 
-    from firebase_etl_spark.sources.rtdb_datasource import RtdbDataSource
+    from pyspark.sql.types import StructType
+
+    from firebase_etl_spark.sources.firebase import read_rtdb_export
 
     st = os.stat(f"{sf_dir}/customer.parquet")
     # fixture keyed on source (mtime, size) — see the sqlstore fixture note
@@ -2018,22 +2019,15 @@ def rtdb_export_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             json.dump(export, fh, ensure_ascii=False)
         os.replace(tmp, path)  # atomic: concurrent callers see old or new
 
-    spark.dataSource.register(RtdbDataSource)
-    # a reader that implements pushFilters() hard-fails on sessions where
-    # Python-source pushdown is off (the default); runtime-settable conf
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    rec = F.from_json(
-        "raw",
-        "c_custkey bigint, c_name string, c_nationkey int, "
-        "c_acctbal double, c_mktsegment string",
-    )
-    scan = (
-        spark.read.format("rtdb")
-        .option("path", path)
-        .option("numPartitions", "8")
-        .load()
-        .select(rec.alias("r"))
-        .select("r.*")
+    # the reader materialises the map key into id/uid, so the record
+    # schema carries both alongside the five customer fields
+    scan = read_rtdb_export(
+        spark,
+        path,
+        StructType.fromDDL(
+            "c_custkey bigint, c_name string, c_nationkey int, "
+            "c_acctbal double, c_mktsegment string, id string, uid string"
+        ),
     )
     return (
         scan.groupBy(F.col("c_mktsegment").alias("segment"))

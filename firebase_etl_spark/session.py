@@ -83,8 +83,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # let Python DataSources (sources/rtdb_datasource.py) receive
-        # pushed filters — off by default in Spark 4.1
+        # let the sqlstore Python DataSource (sources/sqlstore_datasource.py)
+        # receive pushed filters — off by default in Spark 4.1
         .config("spark.sql.python.filterPushdown.enabled", "true")
         # whole-stage codegen is skipped for operators wider than this
         # (default 100 fields): the 130-column bootstrap aggregate ran

@@ -7,17 +7,14 @@ RPC (the N+1 anti-pattern, firebase_service.py:80). The Spark-native design:
 1. **Export, then read**: RTDB data arrives as a JSON export file (the
    shape ``{uid: {field: value, ...}, ...}``) — produced by the reference's
    own ``export_raw_data`` (firebase_service.py:311-349), a REST ``.json``
-   dump, or a GCS backup. Reading a file is partition-parallel and
-   replayable; per-row RPCs are neither.
+   dump, or a GCS backup. Reading a file is replayable; per-row RPCs are
+   not.
 2. **Map explode**: the map-of-objects becomes rows via a MapType read +
    ``explode`` — key materializes as ``id``/``uid`` (P2 derivation,
    reference firebase_service.py:151-152).
 3. **Auth snapshot join**: the Auth user list is exported once and joined
    broadcast (see functions/identity.resolve_provider_and_email) — the N+1
    disappears.
-
-A live REST fetch helper is provided for small nodes (driver-side, then
-parallelize); it is gated so tests never need network.
 """
 
 from __future__ import annotations
@@ -75,32 +72,3 @@ def write_rtdb_export(rows: dict, path: str) -> None:
     with open(path, "w", encoding="utf-8") as fh:
         json.dump(rows, fh, ensure_ascii=False)
 
-
-def fetch_rtdb_node(
-    spark: SparkSession,
-    base_url: str,
-    node: str = "/Users",
-    value_schema: T.StructType = RAW_USER_SCHEMA,
-    auth_token: str | None = None,
-    timeout: int = 60,
-) -> DataFrame:
-    """Live REST fetch of a small node (``GET {base_url}{node}.json``) —
-    driver-side, then parallelized. For big nodes, export to storage and use
-    read_rtdb_export (partition-parallel). Gated: raises if urllib is
-    unavailable or the endpoint unreachable; never used in tests."""
-    import urllib.request  # local import: network path only
-
-    url = f"{base_url.rstrip('/')}{node}.json"
-    if auth_token:
-        url += f"?auth={auth_token}"
-    with urllib.request.urlopen(url, timeout=timeout) as resp:  # noqa: S310
-        payload = json.loads(resp.read().decode("utf-8"))
-    records = []
-    for key, rec in (payload or {}).items():
-        if not isinstance(rec, dict):
-            continue  # skip non-dict values (reference firebase_service.py:174-178)
-        row = {f.name: rec.get(f.name) for f in value_schema.fields}
-        row["id"] = row.get("id") or key
-        row["uid"] = row.get("uid") or key
-        records.append(row)
-    return spark.createDataFrame(records, value_schema)

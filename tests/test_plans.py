@@ -287,3 +287,25 @@ def test_simhash_banded_join_broadcasts_small_corpus(spark, sf_dir):
         assert "BroadcastHashJoin" in physical_plan(joined)
     finally:
         fp.unpersist()
+
+
+def test_declared_sql_queries_leave_no_temp_views(spark, sf_dir):
+    """Queries that pass frames into spark.sql must not leave a named temp
+    view behind: a fixed-name view is state shared by every thread on the
+    session. A child session gives a temp-view catalog of its own."""
+    from firebase_etl_spark.plans import queries_ext as QX
+
+    s = spark.newSession()
+
+    def temp_views():
+        return {t.name for t in s.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    for query in (
+        Q.lineitem_grouping_sets,
+        Q.q17_small_quantity_revenue,
+        QX.top_bigrams_udtf,
+        QX.rtdb_export_segment_stats,
+    ):
+        assert query(s, sf_dir).collect(), query.__name__
+    assert temp_views() == before

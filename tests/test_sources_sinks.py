@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from firebase_etl_spark.operators.multimodal import (
     MEDIA_SCHEMA,
@@ -24,16 +25,41 @@ def test_rtdb_export_roundtrip(spark, tmp_path):
     export = {
         "uidA": {"email": "a@x.com", "name": "A", "status": "actif"},
         "uidB": {"email": "b@x.com", "createdAt": "2024-01-01"},
+        # non-object entries of every JSON kind an export can carry
         "uidC": "corrupt-not-a-dict",
+        "uidD": 42,
+        "uidE": [{"email": "e@x.com"}],
+        "uidF": True,
+        "uidG": None,
     }
     path = str(tmp_path / "users.json")
     write_rtdb_export(export, path)
     df = read_rtdb_export(spark, path)
     rows = {r["id"]: r for r in df.collect()}
-    assert set(rows) == {"uidA", "uidB"}          # corrupt entry dropped
+    assert set(rows) == {"uidA", "uidB"}          # corrupt entries dropped
     assert rows["uidA"]["email"] == "a@x.com"
     assert rows["uidA"]["uid"] == "uidA"          # map key materialized
     assert rows["uidB"]["createdAt"] == "2024-01-01"
+
+    # typed records whose own fields carry no id/uid: the caller appends
+    # id/uid to its schema and the map key fills both
+    typed = {
+        "k1": {"n": 9007199254740993, "x": 2.5, "meta": {"a": [1, 2]}},
+        "k2": {"n": -1, "x": 0.1},
+        "k3": "corrupt",
+    }
+    path = str(tmp_path / "typed.json")
+    write_rtdb_export(typed, path)
+    schema = T.StructType.fromDDL(
+        "n bigint, x double, meta string, id string, uid string"
+    )
+    df = read_rtdb_export(spark, path, schema)
+    got = {r["id"]: r.asDict() for r in df.collect()}
+    assert got == {
+        "k1": {"n": 9007199254740993, "x": 2.5, "meta": '{"a":[1,2]}',
+               "id": "k1", "uid": "k1"},
+        "k2": {"n": -1, "x": 0.1, "meta": None, "id": "k2", "uid": "k2"},
+    }
 
 
 def test_jdbc_reader_options_lazy(spark):
@@ -247,118 +273,6 @@ def test_execute_batch_rolls_back_on_failure():
     assert conn.rolled_back and not conn.committed
     assert "never" not in conn.cur.executed
     assert conn.cur.closed and conn.conn_closed
-
-
-def test_rtdb_datasource_partition_parallel_scan(spark, tmp_path):
-    """The custom Python DataSource must expose the map-of-objects export
-    as a multi-partition (key, raw) scan whose parsed content equals the
-    wholetext reader's output."""
-    import json
-
-    from firebase_etl_spark.sources.firebase import write_rtdb_export
-    from firebase_etl_spark.sources.rtdb_datasource import RtdbDataSource
-
-    rows = {
-        f"uid{i:03d}": {"uid": f"uid{i:03d}", "email": f"u{i}@x.com", "age": i}
-        for i in range(40)
-    }
-    rows["corrupt"] = "not-an-object"
-    path = str(tmp_path / "export.json")
-    write_rtdb_export(rows, path)
-
-    spark.dataSource.register(RtdbDataSource)
-    df = (
-        spark.read.format("rtdb")
-        .option("path", path)
-        .option("numPartitions", "4")
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 4
-    got = {r["key"]: r["raw"] for r in df.collect()}
-    assert len(got) == 41
-    assert json.loads(got["uid007"]) == rows["uid007"]
-    assert json.loads(got["corrupt"]) == "not-an-object"  # survives for quarantine
-
-    # typed downstream parse matches the wholetext reader's semantics
-    import pyspark.sql.functions as F
-
-    from firebase_etl_spark.schemas import RAW_USER_SCHEMA
-
-    parsed = (
-        df.withColumn("rec", F.from_json("raw", RAW_USER_SCHEMA))
-        .filter(F.col("rec").isNotNull() & F.col("raw").startswith("{"))
-        .select("key", "rec.email")
-    )
-    emails = {r["key"]: r["email"] for r in parsed.collect()}
-    assert emails["uid001"] == "u1@x.com" and "corrupt" not in emails
-
-
-def test_rtdb_datasource_key_pushdown_prunes_partitions(spark, tmp_path):
-    """An equality filter on key must push into the scan: only the matching
-    hash bucket is planned, and the result is the single row."""
-    from firebase_etl_spark.sources.firebase import write_rtdb_export
-    from firebase_etl_spark.sources.rtdb_datasource import RtdbDataSource
-
-    rows = {f"uid{i:03d}": {"uid": f"uid{i:03d}", "age": i} for i in range(40)}
-    path = str(tmp_path / "export.json")
-    write_rtdb_export(rows, path)
-
-    spark.dataSource.register(RtdbDataSource)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    df = (
-        spark.read.format("rtdb")
-        .option("path", path)
-        .option("numPartitions", "8")
-        .load()
-        .filter("key = 'uid007'")
-    )
-    assert df.rdd.getNumPartitions() == 1  # 7 of 8 buckets pruned at plan time
-    got = df.collect()
-    assert len(got) == 1 and got[0]["key"] == "uid007"
-
-
-def test_rtdb_datasource_in_filter_pushdown(spark, tmp_path):
-    """`key IN (...)` (pyspark In filter, tuple in `.value`) must push down:
-    only the matching buckets are planned and exactly those rows return."""
-    from firebase_etl_spark.sources.firebase import write_rtdb_export
-    from firebase_etl_spark.sources.rtdb_datasource import RtdbDataSource
-
-    rows = {f"uid{i:03d}": {"uid": f"uid{i:03d}", "age": i} for i in range(40)}
-    path = str(tmp_path / "export.json")
-    write_rtdb_export(rows, path)
-
-    spark.dataSource.register(RtdbDataSource)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    df = (
-        spark.read.format("rtdb")
-        .option("path", path)
-        .option("numPartitions", "8")
-        .load()
-        .filter("key in ('uid003', 'uid017', 'uid031')")
-    )
-    assert df.rdd.getNumPartitions() <= 3  # at most one bucket per key
-    assert {r["key"] for r in df.collect()} == {"uid003", "uid017", "uid031"}
-
-
-def test_rtdb_datasource_conjoined_key_filters_intersect(tmp_path):
-    """`key = 'a' AND key IN ('a','b')` pushes two consumed filters; the
-    reader must intersect them, not keep only the last one."""
-    from firebase_etl_spark.sources.rtdb_datasource import RtdbReader
-    from pyspark.sql.datasource import EqualTo, In
-
-    r = RtdbReader({"path": str(tmp_path / "x.json")})
-    leftover = list(
-        r.pushFilters([EqualTo(("key",), "a"), In(("key",), ("a", "b"))])
-    )
-    assert leftover == []
-    assert r.key_filter == {"a"}
-
-    r2 = RtdbReader({"path": str(tmp_path / "x.json")})
-    leftover2 = list(
-        r2.pushFilters([In(("key",), ("a", "b")), EqualTo(("key",), "c")])
-    )
-    assert leftover2 == []
-    assert r2.key_filter == set()  # contradictory conjunction => no rows
 
 
 def test_sqlstore_partitioned_scan_complete_and_pushed(spark, tmp_path):
