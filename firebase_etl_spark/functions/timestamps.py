@@ -5,28 +5,28 @@ tries, in order: 5 strptime formats, a generic pandas coerce, Firebase
 Timestamp ``.seconds``, and unix epoch int/float with a ``>1e10`` ⇒
 milliseconds heuristic; anything unparseable becomes NULL.
 
-Spark expression: a single ``coalesce`` over ``try_to_timestamp`` patterns
-plus the epoch branch. Whole-stage-codegen'd, no Python in the loop — this
-runs at full JVM speed on 100 TB, unlike a strptime UDF.
+Spark expression: one ``try_cast`` to timestamp for non-numeric strings
+plus the epoch branch. Spark's string-to-timestamp cast already accepts
+every reference format (date only, ``T`` or space separator, fractions of
+up to six digits, a trailing ``Z`` or offset, and the ISO-ish forms the
+generic coerce took), so one cast replaces a cascade of
+``try_to_timestamp`` patterns. The cast is case-sensitive in its ``T``
+and ``Z`` separators, so a lowercase spelling retries on the upper-cased
+string. Whole-stage-codegen'd, no Python in the loop — this runs at full
+JVM speed on 100 TB, unlike a strptime UDF.
+
+Zones: a string without zone is read in the session time zone (UTC on
+``get_spark()`` sessions). A trailing ``Z`` always means UTC, also on
+a non-UTC session. The pattern cascade this replaced matched ``Z`` as a
+literal for zero or six fraction digits, reading those strings in the
+session zone, and honoured it only for the widths that fell through to
+its generic parse.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-#: Spark datetime patterns equivalent to the reference's strptime list
-#: (user_transformer.py:109-115): '%Y-%m-%d %H:%M:%S', '%Y-%m-%dT%H:%M:%S',
-#: '%Y-%m-%dT%H:%M:%S.%f', '%Y-%m-%d', '%Y-%m-%dT%H:%M:%S.%fZ'.
-_PATTERNS = (
-    "yyyy-MM-dd HH:mm:ss",
-    "yyyy-MM-dd'T'HH:mm:ss",
-    "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-    "yyyy-MM-dd",
-    "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'",
-    "yyyy-MM-dd'T'HH:mm:ss'Z'",
-    "yyyy-MM-dd HH:mm:ss.SSSSSS",
-)
 
 #: Epoch magnitude boundary: values > 1e10 are milliseconds, else seconds
 #: (reference user_transformer.py:138-144).
@@ -42,12 +42,10 @@ def parse_datetime(col: Column | str) -> Column:
         F.abs(as_num) > F.lit(_EPOCH_MS_BOUNDARY),
         F.timestamp_millis(as_num.try_cast("long")),
     ).otherwise(F.timestamp_seconds(as_num))
-    candidates = [F.try_to_timestamp(s, F.lit(p)) for p in _PATTERNS]
-    # generic coerce (ISO-ish) before the epoch branch, but only when the
-    # string is not purely numeric (a numeric string must take the epoch
-    # heuristic, not be read as a year).
-    generic = F.when(as_num.isNull(), F.try_to_timestamp(s))
-    return F.coalesce(*candidates, generic, F.when(as_num.isNotNull(), epoch))
+    # a purely numeric string takes the epoch heuristic, never the cast
+    # (which would read it as a year)
+    cast = F.coalesce(s.try_cast("timestamp"), F.upper(s).try_cast("timestamp"))
+    return F.when(as_num.isNull(), cast).otherwise(epoch)
 
 
 def parse_datetime_or_now(col: Column | str) -> Column:

@@ -130,7 +130,7 @@ def bloom_ngram_overlap(
     gram's bits are set) would surface as a driver hash mismatch.
     Equality with the exact operator is additionally pytest-pinned.
 
-    Measured A/B (tools/bloom_decontam_bench.py, sf0.1, min-of-3,
+    Measured A/B (sf0.1, min-of-3,
     probe slices up to 1/3 of the corpus): a TIE at gate scale —
     0.04-0.07s both paths, bloom 1.05-1.15x — because the ~30-word
     synthetic vocabulary caps the probe-gram set at ~27k strings, so

@@ -69,7 +69,7 @@ def dedup_keep_latest_two_phase(
     """Keep-latest via struct-max partial agg + join-back. Equivalent to
     keep='last' with the same tiebreaker.
 
-    MEASURED (tools/skew_dedup_bench.py, ROUND5_NOTES.md §6): on Spark >=3.5
+    MEASURED (ROUND5_NOTES.md §6): on Spark >=3.5
     this twin is REDUNDANT as a skew defense and ~1.5x slower at every
     amplification (2M/10M/30M rows, 30% of rows on one hot key) — the
     optimizer plans ``row_number()==1`` as WindowGroupLimit with a Partial

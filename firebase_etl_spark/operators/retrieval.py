@@ -25,7 +25,7 @@ length rides through the tf groupBy as a grouping key (constant per
 doc), so no per-doc join is needed. Corpus scalars (N, avgdl) are one
 sizes-only aggregate that never explodes.
 
-MEASURED caveat (tools/bm25_pruning_bench.py, sf0.1, min-of-3): the
+MEASURED caveat (sf0.1, min-of-3): the
 pruned plan TIES the naive three-consumer formulation on the gate
 fixture (1.08x at 5 probes, 1.00x at 64) — because this synthetic
 corpus has a 31-token vocabulary and the probes cover 30 of it, the

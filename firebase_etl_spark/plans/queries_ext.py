@@ -2019,14 +2019,12 @@ def rtdb_export_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             json.dump(export, fh, ensure_ascii=False)
         os.replace(tmp, path)  # atomic: concurrent callers see old or new
 
-    # the reader materialises the map key into id/uid, so the record
-    # schema carries both alongside the five customer fields
     scan = read_rtdb_export(
         spark,
         path,
         StructType.fromDDL(
             "c_custkey bigint, c_name string, c_nationkey int, "
-            "c_acctbal double, c_mktsegment string, id string, uid string"
+            "c_acctbal double, c_mktsegment string"
         ),
     )
     return (

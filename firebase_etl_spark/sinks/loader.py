@@ -5,13 +5,17 @@ The reference inserts one row per transaction to isolate failures and
 accumulates per-row errors in a Python list. Distributed rewrite: validate
 FIRST (operators/validate), write the good side in bulk, quarantine the bad
 side with reasons — no per-row transactions, no driver-side error list;
-counts come from an Observation on each write.
+counts come from an Observation on each write. The input is computed once:
+it is persisted for the duration of the call and both writes read it, so
+the upstream (read, transform, dedup, conflict resolution) is not re-run
+for the second side.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -42,10 +46,22 @@ def load_with_quarantine(df: DataFrame, good_path: str, quarantine_path: str) ->
     """Validate -> bulk-write valid rows -> quarantine the rest (with their
     ``violations`` reasons). Mirrors the reference's load report shape
     (postgres_loader.py:585-592) without its 1-row-per-transaction cost.
-    Each side's plan runs once, in its write; no count action."""
-    result = validate_users(df)
-    loaded = _write_counted(result.valid, good_path)
-    quarantined = _write_counted(result.quarantine, quarantine_path)
+
+    ``df`` is computed once: it is persisted, the valid side's write fills
+    the cache and the quarantine side's write reads it, and the cache is
+    dropped before returning (also on failure). A ``df`` the caller has
+    already cached is used as is and left cached. One job per side; no
+    count action."""
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        df = df.persist()
+    try:
+        result = validate_users(df)
+        loaded = _write_counted(result.valid, good_path)
+        quarantined = _write_counted(result.quarantine, quarantine_path)
+    finally:
+        if owned:
+            df.unpersist()
     return LoadReport(total=loaded + quarantined, loaded=loaded, quarantined=quarantined)
 
 

@@ -38,31 +38,36 @@ def read_rtdb_export(
 
     The export is a single JSON document ``{key: record}``; we read it as
     one MapType value and explode. Non-dict values (corrupt entries the
-    reference skips, firebase_service.py:174-178) become NULL structs and
-    are filtered — same semantics, set-based.
+    reference skips, firebase_service.py:174-178) are filtered before the
+    per-record parse — same semantics, set-based.
+
+    The map key becomes ``key_col`` (replacing an embedded value) and fills
+    ``uid`` where the record has none; either column is appended when
+    ``value_schema`` does not declare it.
     """
     # two-stage parse: (1) map<string,string> keeps each record as its raw
     # JSON text (corrupt non-object values survive as plain strings),
-    # (2) per-record from_json with the declared schema. Corrupt entries
-    # fail stage 2 -> NULL struct -> filtered, matching the reference's
-    # skip-non-dict semantics.
+    # (2) per-record from_json with the declared schema. Only object texts
+    # (leading "{") reach stage 2, matching the reference's skip-non-dict
+    # semantics; filtering on the raw text rather than the parsed struct
+    # keeps the optimizer from running the record parse in the Filter too.
     raw = spark.read.text(path, wholetext=True)  # one document, not JSON-lines
-    parsed = raw.select(
-        F.from_json(
-            F.col("value"), T.MapType(T.StringType(), T.StringType())
-        ).alias("root")
+    # explode the parse directly: over a projected attribute the optimizer
+    # infers a non-empty filter on it and pushes that below the projection,
+    # parsing the whole document three times
+    root = F.from_json(F.col("value"), T.MapType(T.StringType(), T.StringType()))
+    exploded = raw.select(F.explode(root).alias("__key", "__raw"))
+    records = exploded.filter(F.col("__raw").startswith("{")).select(
+        F.col("__key").alias("__map_key"),
+        F.from_json(F.col("__raw"), value_schema).alias("__rec"),
     )
-    exploded = parsed.select(F.explode("root").alias("__key", "__raw"))
-    records = exploded.withColumn(
-        "__rec", F.from_json(F.col("__raw"), value_schema)
-    ).filter(F.col("__rec").isNotNull() & F.col("__raw").startswith("{"))
-    cols = [F.col(f"__rec.{f.name}").alias(f.name) for f in value_schema.fields]
-    out = records.select(F.col("__key").alias("__map_key"), *cols)
-    # key materialization: map key wins over any embedded id field
+    out = records.select("__map_key", "__rec.*")
+    # key materialization: the map key (never NULL) replaces any embedded
+    # id and fills uid where the record has none
+    key = F.col("__map_key")
+    uid = F.coalesce(F.col("uid"), key) if "uid" in value_schema.fieldNames() else key
     return (
-        out.withColumn(key_col, F.coalesce(F.col("__map_key"), F.col(key_col)))
-        .withColumn("uid", F.coalesce(F.col("uid"), F.col("__map_key")))
-        .drop("__map_key")
+        out.withColumn(key_col, key).withColumn("uid", uid).drop("__map_key")
     )
 
 

@@ -52,6 +52,65 @@ def test_parse_datetime_formats(spark):
     out = _apply(spark, list(cases), parse_datetime)
     assert out == list(cases.values())
 
+    # edge spellings, compared as UTC epoch micros (year 99999 is out of
+    # Python's datetime range)
+    def micros(*a):
+        return (dt.datetime(*a) - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1)
+
+    edge = {
+        "1990-05-01t10:00:00": micros(1990, 5, 1, 10),
+        "1990-05-01T10:00:00z": micros(1990, 5, 1, 10),
+        "1990-05-01t10:00:00z": micros(1990, 5, 1, 10),
+        "1990-05-01T10:00:00.123456Z": micros(1990, 5, 1, 10, 0, 0, 123456),
+        "1990-05-01T10:00:00.123Z": micros(1990, 5, 1, 10, 0, 0, 123000),
+        "1990-05-01T10:00:00.1Z": micros(1990, 5, 1, 10, 0, 0, 100000),
+        "1990-05-01 10:00:00.123456": micros(1990, 5, 1, 10, 0, 0, 123456),
+        "1990-05-01 10:00:00.123Z": micros(1990, 5, 1, 10, 0, 0, 123000),
+        "1990-05-01T10:00:00.1234567": micros(1990, 5, 1, 10, 0, 0, 123456),
+        "1990-05-01T10:00:00+02:00": micros(1990, 5, 1, 8),
+        "1990-05-01T10:00:00-0530": micros(1990, 5, 1, 15, 30),
+        "1990-05-01T10:00:00 UTC": micros(1990, 5, 1, 10),
+        "1990-05-01T10:00:00 Europe/Paris": micros(1990, 5, 1, 8),
+        "1990-05-01T10:00:00.5+01:00": micros(1990, 5, 1, 9, 0, 0, 500000),
+        "1990-05-01T10:00": micros(1990, 5, 1, 10),
+        "1990-05-01 10:00": micros(1990, 5, 1, 10),
+        "1990-5-1": micros(1990, 5, 1),
+        "2023-05": micros(2023, 5, 1),
+        "+1990-05-01": micros(1990, 5, 1),
+        "  1990-05-01  ": micros(1990, 5, 1),
+        "99999-01-01": 3093496444800000000,
+        "2023": 2023 * 10**6,                  # numeric: epoch seconds
+        "1.5e9": micros(2017, 7, 14, 2, 40),
+        "-86400": micros(1969, 12, 31),
+        "1990-05-01T": None,
+        "1990-13-01": None,
+        "1990-02-30": None,
+        "1990/05/01": None,
+        "": None,
+        "Infinity": None,
+    }
+    assert _apply(spark, list(edge), lambda c: F.unix_micros(parse_datetime(c))) == list(
+        edge.values()
+    )
+
+    # on a non-UTC session a string without zone is read in the session
+    # zone; a trailing Z still means UTC
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    try:
+        local = {
+            "1990-05-01": micros(1990, 4, 30, 15),
+            "1990-05-01 10:00:00": micros(1990, 5, 1, 1),
+            "1990-05-01T10:00:00.123456": micros(1990, 5, 1, 1, 0, 0, 123456),
+            "1990-05-01T10:00:00+02:00": micros(1990, 5, 1, 8),
+            "768132000": micros(1994, 5, 5, 10),
+            "1990-05-01T10:00:00Z": micros(1990, 5, 1, 10),
+        }
+        got = _apply(spark, list(local), lambda c: F.unix_micros(parse_datetime(c)))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    assert got == list(local.values())
+
 
 def test_parse_datetime_epoch_heuristic(spark):
     # 768132000 sec = 1994-05-05T10:00:00 UTC; the millis variant

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -41,8 +42,8 @@ def test_rtdb_export_roundtrip(spark, tmp_path):
     assert rows["uidA"]["uid"] == "uidA"          # map key materialized
     assert rows["uidB"]["createdAt"] == "2024-01-01"
 
-    # typed records whose own fields carry no id/uid: the caller appends
-    # id/uid to its schema and the map key fills both
+    # typed records whose own fields carry no id/uid, read with a schema
+    # that declares both: the map key fills them
     typed = {
         "k1": {"n": 9007199254740993, "x": 2.5, "meta": {"a": [1, 2]}},
         "k2": {"n": -1, "x": 0.1},
@@ -60,6 +61,16 @@ def test_rtdb_export_roundtrip(spark, tmp_path):
                "id": "k1", "uid": "k1"},
         "k2": {"n": -1, "x": 0.1, "meta": None, "id": "k2", "uid": "k2"},
     }
+    # a schema that declares neither id nor uid: the map key fills both
+    df = read_rtdb_export(spark, path, T.StructType.fromDDL("n bigint"))
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (-1, "k2", "k2"), (9007199254740993, "k1", "k1"),
+    ]
+    assert df.columns == ["n", "id", "uid"]
+    # one parse of the document and one per record: no Filter re-evaluates
+    # either from_json
+    plan = df._jdf.queryExecution().optimizedPlan().toJSON()
+    assert plan.count('expressions.JsonToStructs"') == 2
 
 
 def test_jdbc_reader_options_lazy(spark):
@@ -125,19 +136,41 @@ def test_dynamic_partition_overwrite_replaces_only_touched(spark, tmp_path):
 
 
 def test_load_with_quarantine(spark, tmp_path, jobs_started):
+    sc = spark.sparkContext
+    evaluated = sc.accumulator(0)
+
+    @F.udf("string")
+    def counted(v):
+        evaluated.add(1)
+        return v
+
     df = spark.createDataFrame(
         [("i1", "a@b.c", "ACTIVE"), (None, "b@b.c", "ACTIVE"), ("i3", None, "BAD")],
         "id string, email string, status string",
-    )
+    ).withColumn("email", counted("email"))
+    # RDDs other tests persisted may be collected meanwhile, so compare ids
+    persisted = set(sc._jsc.getPersistentRDDs().keySet())
     rep, n_jobs = jobs_started(lambda: load_with_quarantine(
         df, str(tmp_path / "good"), str(tmp_path / "quar")
     ))
     assert n_jobs == 2                         # one write per side, no counts
     assert (rep.total, rep.loaded, rep.quarantined) == (3, 1, 2)
+    # the input is computed once for both sides, and its cache is gone
+    assert evaluated.value == 3
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= persisted
+    assert df.storageLevel == StorageLevel.NONE
     good = spark.read.parquet(str(tmp_path / "good"))
     quar = spark.read.parquet(str(tmp_path / "quar"))
     assert (good.count(), quar.count()) == (rep.loaded, rep.quarantined)
     assert "violations" in quar.columns
+
+    # a frame the caller cached stays cached
+    df.cache()
+    try:
+        load_with_quarantine(df, str(tmp_path / "good2"), str(tmp_path / "quar2"))
+        assert df.storageLevel != StorageLevel.NONE
+    finally:
+        df.unpersist()
 
 
 def test_media_feature_extraction(spark):
