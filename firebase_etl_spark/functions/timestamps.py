@@ -17,10 +17,8 @@ JVM speed on 100 TB, unlike a strptime UDF.
 
 Zones: a string without zone is read in the session time zone (UTC on
 ``get_spark()`` sessions). A trailing ``Z`` always means UTC, also on
-a non-UTC session. The pattern cascade this replaced matched ``Z`` as a
-literal for zero or six fraction digits, reading those strings in the
-session zone, and honoured it only for the widths that fell through to
-its generic parse.
+a non-UTC session; the earlier pattern cascade read ``...T10:00:00Z``
+and six-digit-fraction ``Z`` strings in the session zone.
 """
 
 from __future__ import annotations
