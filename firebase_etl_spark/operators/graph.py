@@ -27,7 +27,6 @@ def connected_components(
     dst: str = "id_b",
     max_iter: int = 25,
     check_every: int = 2,
-    edges_per_task: int = 100_000,
     local_edge_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Label every node with its component's minimum node id.
@@ -47,10 +46,9 @@ def connected_components(
     jumped label propagation = ~6 s for an 1840-edge graph). Above the
     threshold, the distributed loop runs:
 
-    - each round is one join+agg job; the loop's shuffle partitioning is
-      sized from the materialized edge count (``edges_per_task``) because
-      iterative plans under localCheckpoint don't get AQE's runtime
-      coalescing;
+    - each round is one join+agg job; AQE coalesces the round's shuffles
+      (each round's input is a ``localCheckpoint``, whose plan AQE sizes
+      at runtime like any other);
     - a pointer-jumping step per round cuts diameter-bound rounds to
       roughly half (17 -> 11 measured);
     - the converged-count action runs every ``check_every`` rounds.
@@ -77,15 +75,7 @@ def connected_components(
     n_edges = sym.count()  # cheap: sym is checkpointed
     if n_edges <= local_edge_threshold:
         return _cc_local(spark, sym)
-    conf = spark.conf
-    old_parts = conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(old_parts), n_edges // edges_per_task + 1))
-    conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        labels = _cc_loop(sym, max_iter, check_every)
-    finally:
-        conf.set("spark.sql.shuffle.partitions", old_parts)
-    return labels
+    return _cc_loop(sym, max_iter, check_every)
 
 
 def _cc_local(spark, sym: DataFrame) -> DataFrame:
@@ -265,37 +255,27 @@ def pagerank(
     else:
         teleport = (PR_SCALE // n) * (100 - damping_pct) // 100
         tele_col = F.lit(teleport).cast("long")
-    # size the loop's shuffles from the aggregated graph, not the session
-    # default: iterative localCheckpoint plans don't get AQE coalescing,
-    # and 10 rounds x 32 near-empty partitions is pure scheduling
-    # overhead (same reasoning as _cc_loop)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(old_parts), n_edges // 100_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        ranks = nodes.withColumn("rank", F.lit(PR_SCALE // n).cast("long"))
-        for it in range(n_iter):
-            contrib = (
-                e.join(ranks, e.src == ranks.node)
-                .select(
-                    F.col("dst"),
-                    F.expr("rank * w div w_out").alias("c"),
-                )
-                .groupBy("dst")
-                .agg(F.sum("c").alias("incoming"))
+    ranks = nodes.withColumn("rank", F.lit(PR_SCALE // n).cast("long"))
+    for it in range(n_iter):
+        contrib = (
+            e.join(ranks, e.src == ranks.node)
+            .select(
+                F.col("dst"),
+                F.expr("rank * w div w_out").alias("c"),
             )
-            ranks = nodes.join(contrib, nodes.node == contrib.dst, "left").select(
-                "node",
-                (
-                    tele_col
-                    + F.expr(f"{damping_pct} * coalesce(incoming, 0L) div 100")
-                ).alias("rank"),
-            )
-            if (it + 1) % checkpoint_every == 0:
-                ranks = ranks.localCheckpoint(eager=True)
-        ranks = ranks.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+            .groupBy("dst")
+            .agg(F.sum("c").alias("incoming"))
+        )
+        ranks = nodes.join(contrib, nodes.node == contrib.dst, "left").select(
+            "node",
+            (
+                tele_col
+                + F.expr(f"{damping_pct} * coalesce(incoming, 0L) div 100")
+            ).alias("rank"),
+        )
+        if (it + 1) % checkpoint_every == 0:
+            ranks = ranks.localCheckpoint(eager=True)
+    ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("node", F.col("rank").alias("rank_e12"))
 
 
@@ -804,21 +784,11 @@ def modularity_report(
     # 150 exchanges before this). Both tables are edge/node-sized.
     edges = edges.localCheckpoint(eager=True)
     labels = labels.localCheckpoint(eager=True)
-    # size the audit's shuffles from the AGGREGATED graph, not the
-    # session default (the pagerank loop_parts convention): the tail is
-    # four tiny joins/aggs over edge/community-sized tables, and 32
-    # near-empty partitions per exchange is pure scheduling overhead
-    # (measured 3.97 s -> see notes; checkpointed plans don't get AQE
-    # coalescing)
-    spark = edges.sparkSession
-    n_edges = edges.count()  # cheap: checkpointed
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    tail_parts = max(1, min(int(old_parts), n_edges // 100_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(tail_parts))
-    try:
-        return _modularity_tail(edges, labels, src, dst, top)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    # size the audit's shuffles from the graph, not the session default:
+    # the tail is a few aggregates over edge/community-sized tables, and a
+    # 200-partition virgin session writes 200 buckets per map task for them
+    n_parts = edges.count() // 100_000 + 1  # cheap: checkpointed
+    return _modularity_tail(edges, labels, src, dst, top, n_parts)
 
 
 def _modularity_tail(
@@ -827,8 +797,15 @@ def _modularity_tail(
     src: str,
     dst: str,
     top: int,
+    n_parts: int,
 ) -> DataFrame:
+    # Every shuffle is pinned to n_parts: each aggregate reads an explicit
+    # repartition on its key (AQE does not coalesce a numbered repartition,
+    # and the groupBy reuses its exchange). The node- and community-sized
+    # sides are broadcast into the joins, which therefore shuffle nothing;
+    # the exactness limit above bounds them at 2m <= ~2e6 rows.
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    labels = F.broadcast(labels)
     la = labels.select(
         F.col("node").alias("a"), F.col("community").alias("ca")
     )
@@ -838,23 +815,26 @@ def _modularity_tail(
     e2 = e.join(la, "a").join(lb, "b")
     intra = (
         e2.filter(F.col("ca") == F.col("cb"))
+        .repartition(n_parts, "ca")
         .groupBy(F.col("ca").alias("community"))
         .agg(F.count(F.lit(1)).alias("intra_edges"))
     )
     deg = (
         e.select(F.col("a").alias("node"))
         .union(e.select(F.col("b").alias("node")))
+        .repartition(n_parts, "node")
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
     )
     comm = (
         deg.join(labels, "node")
+        .repartition(n_parts, "community")
         .groupBy("community")
         .agg(
             F.count(F.lit(1)).alias("n_members"),
             F.sum("d").cast("long").alias("degree_sum"),
         )
-        .join(intra, "community", "left")
+        .join(F.broadcast(intra), "community", "left")
         .withColumn(
             "intra_edges",
             F.coalesce(F.col("intra_edges"), F.lit(0)).cast("long"),
@@ -895,7 +875,4 @@ def _modularity_tail(
         )
         .orderBy(F.desc("n_members"), "community")
         .limit(top)
-        # top-sized; materialized HERE so every tail job runs inside
-        # the sized-shuffle window of the caller
-        .localCheckpoint(eager=True)
     )

@@ -3605,6 +3605,7 @@ def _sqlstore_orders_fixture(spark: SparkSession, sf_dir: str) -> str:
             con.close()
         os.replace(tmp, path)  # atomic: concurrent callers see old or new
     spark.dataSource.register(SqlStoreDataSource)
+    # kept: without it a virgin session fails with DATA_SOURCE_PUSHDOWN_DISABLED
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     return path
 

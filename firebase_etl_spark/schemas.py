@@ -106,3 +106,18 @@ TABLE_NAMES = (
     "documents",
     "embeddings",
 )
+
+#: ``events`` as read from parquet. ``ts`` is read as a long: the files
+#: may store TIMESTAMP(NANOS), which Spark has no type for, or
+#: TIMESTAMP(MICROS); the long read returns the stored unit as is and
+#: ``sources.tables.events_ts_to_timestamp`` converts it.
+EVENTS_RAW_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType(), True),
+        T.StructField("ts", T.LongType(), True),
+        T.StructField("user_id", T.LongType(), True),
+        T.StructField("event_type", T.StringType(), True),
+        T.StructField("value", T.DoubleType(), True),
+        T.StructField("props", T.StringType(), True),
+    ]
+)

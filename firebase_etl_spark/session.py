@@ -93,9 +93,6 @@ def get_spark(
         # anything that still overflows janino's method limit falls
         # back to interpreted exactly as before (codegen.fallback).
         .config("spark.sql.codegen.maxFields", "300")
-        # driver testdata stores events.ts as TIMESTAMP(NANOS); Spark has no
-        # nanos type — read as long and convert in the loader (tables.py).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # managed tables (bucketed sinks) land outside the repo
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
         # PySpark's DataFrame debugging wraps every functions.* and Column

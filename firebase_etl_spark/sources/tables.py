@@ -2,8 +2,9 @@
 
 One parquet file per table under ``{sf_dir}/{name}.parquet`` (TESTDATA.md).
 Parquet scans give Catalyst predicate pushdown + column pruning for free, so
-these loaders deliberately do nothing but ``spark.read.parquet`` — every
-filter/projection belongs in the query plan, not the loader.
+these loaders deliberately do nothing but ``spark.read.parquet``, plus the
+one ``events.ts`` conversion — every filter/projection belongs in the query
+plan, not the loader.
 """
 
 from __future__ import annotations
@@ -13,27 +14,61 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from firebase_etl_spark.schemas import TABLE_NAMES
+from firebase_etl_spark.schemas import EVENTS_RAW_SCHEMA, TABLE_NAMES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def events_ts_to_timestamp(df: DataFrame) -> DataFrame:
+    """Turn ``events.ts``, read as a long (``EVENTS_RAW_SCHEMA``), into a
+    UTC TimestampType at microsecond precision.
+
+    The long is the stored value, unchanged: nanoseconds for parquet
+    TIMESTAMP(NANOS), microseconds for TIMESTAMP(MICROS). On Spark 4.1 this
+    holds for the batch and the streaming reader alike, on any session,
+    with or without the legacy nanos-as-long parquet conf (sub-microsecond
+    digits survive the read). Any instant after 1973 is >= 1e17
+    in nanoseconds, while microseconds stay below 1e16 until the year
+    2286, so the two ranges cannot overlap for real data. Nanoseconds are
+    truncated to microseconds, as DuckDB's ``epoch_us`` does; integer
+    ``div`` because ``/`` goes through double and loses precision at 1e18.
+    """
+    micros = F.when(
+        F.col("ts") >= F.lit(10**17), F.expr("ts div 1000")
+    ).otherwise(F.col("ts"))
+    return df.withColumn("ts", F.timestamp_micros(micros))
+
+
+def _ts_stored_as_int96(path: str) -> bool:
+    """Whether the local parquet file or directory at ``path`` stores
+    ``ts`` as INT96, the legacy encoding Spark's own writer uses by default
+    (``spark.sql.parquet.outputTimestampType``). Spark reads INT96 only as a
+    UTC timestamp, never as a long, so such files skip the long read.
+    Reads one footer; a path that is not local reads as INT64."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = [path] if os.path.isfile(path) else sorted(
+        glob.glob(os.path.join(path, "*.parquet"))
+    )
+    if not files:
+        return False
+    schema = pq.ParquetFile(files[0]).schema
+    names = [schema.column(i).name for i in range(len(schema))]
+    if "ts" not in names:
+        return False
+    return schema.column(names.index("ts")).physical_type == "INT96"
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     """Read one synthetic table as a DataFrame (lazy parquet scan).
 
-    ``events.ts`` is parquet TIMESTAMP(NANOS, isAdjustedToUTC=false). How that
-    arrives depends on the session the caller hands us:
-
-    * sessions built with ``spark.sql.legacy.parquet.nanosAsLong`` (our own
-      ``get_spark``) read it as a raw nanosecond ``bigint``;
-    * plain Spark 4.1 sessions read it as ``timestamp_ntz`` truncated to
-      microseconds (matching DuckDB's truncation);
-    * older/conservative sessions refuse the scan with PARQUET_TYPE_ILLEGAL,
-      in which case we set the legacy conf at runtime and retry.
-
-    All flavors are normalized to a UTC-instant TimestampType at microsecond
-    precision so downstream ``cast('long')`` epoch arithmetic and DuckDB
-    oracle comparisons agree regardless of who built the session.
+    ``events`` is read with ``EVENTS_RAW_SCHEMA`` and its ``ts`` converted
+    by ``events_ts_to_timestamp``, so the result is the same UTC instants
+    on any session, whatever its timezone or parquet confs, and for
+    either stored timestamp unit. Events written by Spark with its default
+    INT96 timestamps are read as they are.
     """
     sf_dir = sf_dir or DEFAULT_SF_DIR
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -50,37 +85,12 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
         spark._graft_table_cache = cache
     if path in cache:
         return cache[path]
-    try:
+    if name != "events" or _ts_stored_as_int96(path):
         df = spark.read.parquet(path)
-    except Exception:
-        # PARQUET_TYPE_ILLEGAL: this session can't map TIMESTAMP(NANOS);
-        # the legacy conf is runtime-settable, so flip it and retry.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-    for field in df.schema.fields:
-        if field.name != "ts":
-            continue
-        kind = field.dataType.simpleString()
-        if kind == "bigint":
-            # integer division — `/` would go through double and lose
-            # precision at 1e18 nanos
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif kind == "timestamp_ntz":
-            # naive micros are UTC wall clock; pin them to UTC instants. Any
-            # route through an NTZ->TIMESTAMP cast (incl. to_utc_timestamp)
-            # applies spark.sql.session.timeZone first, and interval
-            # arithmetic with a DAY component is DST-aware — both shift the
-            # instant on non-UTC sessions. make_timestamp with an explicit
-            # 'UTC' zone rebuilds the wall clock from tz-free field
-            # extractions, so the result is session-timezone independent at
-            # full microsecond precision (extract SECOND keeps the fraction).
-            df = df.withColumn(
-                "ts",
-                F.expr(
-                    "make_timestamp(year(ts), month(ts), day(ts), "
-                    "hour(ts), minute(ts), extract(SECOND FROM ts), 'UTC')"
-                ),
-            )
+    else:
+        df = events_ts_to_timestamp(
+            spark.read.schema(EVENTS_RAW_SCHEMA).parquet(path)
+        )
     cache[path] = df
     return df
 

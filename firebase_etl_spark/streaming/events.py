@@ -29,46 +29,23 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
-#: events table schema with ts as long nanos (as stored — see
-#: sources/tables.py) — the stream reader converts to TimestampType.
-EVENTS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), True),
-        T.StructField("ts", T.LongType(), True),  # nanos (parquet TIMESTAMP(NANOS))
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("value", T.DoubleType(), True),
-        T.StructField("props", T.StringType(), True),
-    ]
-)
+from firebase_etl_spark.schemas import EVENTS_RAW_SCHEMA
+from firebase_etl_spark.sources.tables import events_ts_to_timestamp
 
 
 def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     """Streaming read of the events parquet (file source). One file per
     micro-batch locally; on a cluster this is the pattern for a landing-zone
-    directory fed by an ingestion job."""
-    import os
-
+    directory fed by an ingestion job. ``ts`` is read and converted as the
+    batch loader does (``sources.tables.load_table``)."""
     reader = spark.readStream.schema(EVENTS_RAW_SCHEMA).option("maxFilesPerTrigger", 1)
     if os.path.isfile(path):
         # file source wants a directory: point at the parent + glob filter
         reader = reader.option("pathGlobFilter", os.path.basename(path))
         path = os.path.dirname(path)
-    raw = reader.parquet(path)
-    # The forced-long read of the TIMESTAMP(NANOS) column is conf-dependent:
-    # sessions built with spark.sql.legacy.parquet.nanosAsLong deliver raw
-    # NANOS, while a plain session's reader truncates to MICROS before
-    # applying the long schema (and flipping the conf at runtime does not
-    # reach the already-planned streaming source). Disambiguate by
-    # magnitude: any date after 1973 is >= 1e17 in nanos, while micros stay
-    # < 1e16 until year 2286 — the two ranges cannot overlap for real data.
-    micros = F.when(
-        F.col("ts") >= F.lit(10**17), F.expr("ts div 1000")
-    ).otherwise(F.col("ts"))
-    return raw.withColumn("ts", F.timestamp_micros(micros))
+    return events_ts_to_timestamp(reader.parquet(path))
 
 
 def streaming_event_counts(

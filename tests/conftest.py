@@ -49,6 +49,14 @@ def driver_query_runs(spark):
     from a thread pool (Spark interleaves jobs from submitter threads —
     the same shape bench.py's warmup uses).
 
+    Sharing one session across threads holds because of a rule every
+    declared query keeps: none writes a session conf, except the sqlstore
+    queries' ``spark.sql.python.filterPushdown.enabled`` (set to the value
+    ``get_spark`` already gives, and never restored), and none registers a
+    temp view under a fixed name (pass frames to ``spark.sql`` as
+    arguments instead). ``test_shared_session_confs_stay_fixed`` and
+    ``tools/driver_sim.py`` check the conf half.
+
     Returns {name: (scale_violations, spark_columns, rows, error)}."""
     import sys as _sys
     from concurrent.futures import ThreadPoolExecutor

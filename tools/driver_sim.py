@@ -5,7 +5,8 @@ Uses a VIRGIN SparkSession (no firebase_etl_spark.session confs) because the
 driver builds its own — round 1's red rows came from assuming get_spark().
 
 Usage: python tools/driver_sim.py [sf_dir] [query ...]
-Exit code 1 if any oracle-backed query mismatches.
+Exit code 1 if any oracle-backed query mismatches, or if entry() or any
+query leaves a changed value in one of ``FIXED_CONFS``.
 """
 
 from __future__ import annotations
@@ -95,6 +96,69 @@ def norm(v, loose: bool = False):
     return str(v)
 
 
+#: session confs the package once wrote at runtime (graph loops flipped
+#: the shuffle partitions, the events loader turned on nanosAsLong); no
+#: query may change either on the caller's session
+FIXED_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
+
+def check_query(spark, con, oracles, name, fn) -> bool:
+    """Run one declared query against its oracle and print its line;
+    True when it matches (or is rows-only)."""
+    t0 = time.time()
+    try:
+        sdf = fn(spark, SF_DIR)
+        srows = [tuple(r) for r in sdf.collect()]
+        scols = sdf.columns
+    except Exception as exc:  # noqa: BLE001
+        print(f"{name}: SPARK ERROR {type(exc).__name__}: {exc}")
+        return False
+    sql = oracles.get(name)
+    if sql is None:
+        print(f"{name}: rows-only {len(srows)} ({time.time() - t0:.1f}s)")
+        return True
+    try:
+        res = con.execute(sql)
+        dcols = [d[0] for d in res.description]
+        drows = res.fetchall()
+    except Exception as exc:  # noqa: BLE001
+        print(f"{name}: ORACLE ERROR {type(exc).__name__}: {exc}")
+        return False
+    try:
+        lint = lint_oracle_types(con, sql, sdf.dtypes)
+    except Exception as exc:  # noqa: BLE001
+        lint = [f"DESCRIBE failed: {type(exc).__name__}: {exc}"]
+    if lint:
+        print(f"{name}: TYPE-LINT FAIL")
+        for p in lint:
+            print(f"  {p}")
+        return False
+    o_s = sorted(range(len(scols)), key=lambda i: scols[i])
+    o_d = sorted(range(len(dcols)), key=lambda i: dcols[i])
+    cols_ok = sorted(scols) == sorted(dcols)
+    rows_ok = len(srows) == len(drows)
+    loose = name in LOOSE_FLOAT_QUERIES
+    s_set = sorted(tuple(norm(r[i], loose) for i in o_s) for r in srows)
+    d_set = sorted(tuple(norm(r[i], loose) for i in o_d) for r in drows)
+    match = cols_ok and rows_ok and s_set == d_set
+    status = "OK" if match else "MISMATCH"
+    print(f"{name}: rows={len(srows)} {status} ({time.time() - t0:.1f}s)")
+    if not match:
+        if not cols_ok:
+            print(f"  cols spark={sorted(scols)} oracle={sorted(dcols)}")
+        elif not rows_ok:
+            print(f"  rowcount spark={len(srows)} oracle={len(drows)}")
+        else:
+            diff_s = [r for r in s_set if r not in d_set][:3]
+            diff_d = [r for r in d_set if r not in s_set][:3]
+            print(f"  spark-only sample: {diff_s}")
+            print(f"  oracle-only sample: {diff_d}")
+    return match
+
+
 def main() -> int:
     spark = (
         SparkSession.builder.master("local[16]")
@@ -105,9 +169,23 @@ def main() -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    confs = {k: spark.conf.get(k) for k in FIXED_CONFS}
+    bad = []
+
+    def conf_check(name: str) -> None:
+        now = {k: spark.conf.get(k) for k in FIXED_CONFS}
+        changed = [
+            f"{k} {confs[k]} -> {now[k]}" for k in FIXED_CONFS if now[k] != confs[k]
+        ]
+        if changed:
+            if name not in bad:
+                bad.append(name)
+            print(f"{name}: CONF CHANGED {'; '.join(changed)}")
+            confs.update(now)
 
     if not ONLY:
         print("entry rows:", len(m.entry(spark).collect()))
+        conf_check("entry")
 
     con = duckdb.connect()
     for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
@@ -116,62 +194,12 @@ def main() -> int:
         )
 
     oracles = m.oracle_sql()
-    bad = []
     for name, fn in m.queries().items():
         if ONLY and name not in ONLY:
             continue
-        t0 = time.time()
-        try:
-            sdf = fn(spark, SF_DIR)
-            srows = [tuple(r) for r in sdf.collect()]
-            scols = sdf.columns
-        except Exception as exc:  # noqa: BLE001
+        if not check_query(spark, con, oracles, name, fn):
             bad.append(name)
-            print(f"{name}: SPARK ERROR {type(exc).__name__}: {exc}")
-            continue
-        sql = oracles.get(name)
-        if sql is None:
-            print(f"{name}: rows-only {len(srows)} ({time.time() - t0:.1f}s)")
-            continue
-        try:
-            res = con.execute(sql)
-            dcols = [d[0] for d in res.description]
-            drows = res.fetchall()
-        except Exception as exc:  # noqa: BLE001
-            bad.append(name)
-            print(f"{name}: ORACLE ERROR {type(exc).__name__}: {exc}")
-            continue
-        try:
-            lint = lint_oracle_types(con, sql, sdf.dtypes)
-        except Exception as exc:  # noqa: BLE001
-            lint = [f"DESCRIBE failed: {type(exc).__name__}: {exc}"]
-        if lint:
-            bad.append(name)
-            print(f"{name}: TYPE-LINT FAIL")
-            for p in lint:
-                print(f"  {p}")
-            continue
-        o_s = sorted(range(len(scols)), key=lambda i: scols[i])
-        o_d = sorted(range(len(dcols)), key=lambda i: dcols[i])
-        cols_ok = sorted(scols) == sorted(dcols)
-        rows_ok = len(srows) == len(drows)
-        loose = name in LOOSE_FLOAT_QUERIES
-        s_set = sorted(tuple(norm(r[i], loose) for i in o_s) for r in srows)
-        d_set = sorted(tuple(norm(r[i], loose) for i in o_d) for r in drows)
-        match = cols_ok and rows_ok and s_set == d_set
-        status = "OK" if match else "MISMATCH"
-        print(f"{name}: rows={len(srows)} {status} ({time.time() - t0:.1f}s)")
-        if not match:
-            bad.append(name)
-            if not cols_ok:
-                print(f"  cols spark={sorted(scols)} oracle={sorted(dcols)}")
-            elif not rows_ok:
-                print(f"  rowcount spark={len(srows)} oracle={len(drows)}")
-            else:
-                diff_s = [r for r in s_set if r not in d_set][:3]
-                diff_d = [r for r in d_set if r not in s_set][:3]
-                print(f"  spark-only sample: {diff_s}")
-                print(f"  oracle-only sample: {diff_d}")
+        conf_check(name)
     spark.stop()
     print(f"\n{'FAIL: ' + ', '.join(bad) if bad else 'ALL OK'}")
     return 1 if bad else 0
