@@ -39,36 +39,13 @@ def events_ts_to_timestamp(df: DataFrame) -> DataFrame:
     return df.withColumn("ts", F.timestamp_micros(micros))
 
 
-def _ts_stored_as_int96(path: str) -> bool:
-    """Whether the local parquet file or directory at ``path`` stores
-    ``ts`` as INT96, the legacy encoding Spark's own writer uses by default
-    (``spark.sql.parquet.outputTimestampType``). Spark reads INT96 only as a
-    UTC timestamp, never as a long, so such files skip the long read.
-    Reads one footer; a path that is not local reads as INT64."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    files = [path] if os.path.isfile(path) else sorted(
-        glob.glob(os.path.join(path, "*.parquet"))
-    )
-    if not files:
-        return False
-    schema = pq.ParquetFile(files[0]).schema
-    names = [schema.column(i).name for i in range(len(schema))]
-    if "ts" not in names:
-        return False
-    return schema.column(names.index("ts")).physical_type == "INT96"
-
-
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     """Read one synthetic table as a DataFrame (lazy parquet scan).
 
     ``events`` is read with ``EVENTS_RAW_SCHEMA`` and its ``ts`` converted
     by ``events_ts_to_timestamp``, so the result is the same UTC instants
     on any session, whatever its timezone or parquet confs, and for
-    either stored timestamp unit. Events written by Spark with its default
-    INT96 timestamps are read as they are.
+    either stored timestamp unit.
     """
     sf_dir = sf_dir or DEFAULT_SF_DIR
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -85,12 +62,12 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
         spark._graft_table_cache = cache
     if path in cache:
         return cache[path]
-    if name != "events" or _ts_stored_as_int96(path):
-        df = spark.read.parquet(path)
-    else:
+    if name == "events":
         df = events_ts_to_timestamp(
             spark.read.schema(EVENTS_RAW_SCHEMA).parquet(path)
         )
+    else:
+        df = spark.read.parquet(path)
     cache[path] = df
     return df
 

@@ -22,9 +22,10 @@ def empty_docs(spark):
 
 @pytest.fixture(scope="module")
 def empty_events(spark):
+    # ts as epoch microseconds: load_table reads events.ts as a long
     return spark.createDataFrame(
         [],
-        "event_id long, ts timestamp, user_id long, event_type string,"
+        "event_id long, ts long, user_id long, event_type string,"
         " value double, props string",
     )
 

@@ -2340,7 +2340,8 @@ def test_transition_matrix_hand_fixture(spark, tmp_path):
         rows, "user_id long, ts timestamp, event_id long, event_type string, value double"
     )
     p = str(tmp_path / "events.parquet")
-    df.write.parquet(p)
+    # stored as epoch microseconds, the long load_table reads events.ts as
+    df.withColumn("ts", F.unix_micros("ts")).write.parquet(p)
     got = {
         (r["cur_type"], r["next_type"]): (r["n_transitions"], r["p_next"])
         for r in events_transition_matrix(spark, str(tmp_path)).collect()
@@ -2977,7 +2978,7 @@ def test_mmr_topk_validation_and_small_corpus(spark):
         mmr_topk(df, query_id=7, k=5, pool=3)
 
 
-def test_modularity_report_two_triangles_bridge(spark):
+def test_modularity_report_two_triangles_bridge(spark, monkeypatch):
     """Hand case: two triangles joined by one bridge edge (m = 7).
     Good partition (one community per triangle): intra 3 + 3,
     degree sums 7 + 7, q_num = 2*(4*7*3 - 49) = 70, Q = 70/196 ->
@@ -3011,6 +3012,13 @@ def test_modularity_report_two_triangles_bridge(spark):
     assert all(r["intra_edges"] == 0 for r in out2)
     assert all(r["q_num"] == -66 for r in out2)
     assert all(r["modularity_e6"] == -336734 for r in out2)
+
+    # labels too large to broadcast: the shuffle joins give the same rows
+    from firebase_etl_spark.operators import graph
+
+    monkeypatch.setattr(graph, "BROADCAST_LABEL_ROWS", 0)
+    assert modularity_report(edges, labels=good).collect() == out
+    assert modularity_report(edges, labels=bad).collect() == out2
 
 
 def test_modularity_single_community_is_zero(spark):
